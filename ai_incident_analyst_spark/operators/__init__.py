@@ -14,7 +14,7 @@ from .clustering import (
     kmeans_fit,
     kmeans_inertia,
 )
-from .knn import knn_join, knn_join_blocked
+from .knn import knn_join
 from .packing import global_cumsum, pack_sequences
 from .sampling import quota_sample
 from .text_analysis import (
@@ -31,7 +31,7 @@ __all__ = [
     "minhash_lsh_neardup", "ngram_jaccard_pairs", "shingle",
     "simhash", "simhash_neardup",
     "centroids_df", "kmeans_assign", "kmeans_fit", "kmeans_inertia",
-    "knn_join", "knn_join_blocked",
+    "knn_join",
     "global_cumsum", "pack_sequences", "quota_sample",
     "fingerprint", "lang_id", "ngram_contamination",
     "quality_score", "repetition_stats", "token_count",

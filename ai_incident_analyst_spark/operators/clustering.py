@@ -276,9 +276,8 @@ def kmeans_fit_int(df: DataFrame, id_col: str, vec_col: str, k: int,
             counts, sums = folded[:, 0], folded[:, 1:]
             upd = counts > 0
             cents = cents.copy()
-            cents[upd] = np.floor(
-                sums[upd].astype(np.float64) / counts[upd, None] + 0.5
-            ).astype(np.int64)
+            cents[upd] = _quantize(
+                sums[upd].astype(np.float64) / counts[upd, None], 1)
         return cents
     finally:
         data.unpersist()

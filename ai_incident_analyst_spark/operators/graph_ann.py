@@ -36,66 +36,32 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity
+from .knn import _top_k, knn_join
+from .util import round_half_up
 
 
 def build_knn_graph(df: DataFrame, id_col: str, vec_col: str,
                     k: int = 4, round_dp: int = 6) -> DataFrame:
     """Exact k-NN adjacency ``(src, dst, sim)``: each node's ``k`` most
-    cosine-similar OTHER nodes, ``sim`` rounded to ``round_dp`` before
-    the rank (ties by dst id) so the edge set reproduces cross-engine.
+    cosine-similar OTHER nodes, ``sim`` rounded half away from zero to
+    ``round_dp`` before the rank (ties by dst id) so the edge set
+    reproduces cross-engine.
 
-    n² reference build, blocked-matmul form (the ``knn_join_blocked``
-    recipe): the node matrix is broadcast once, each partition computes
-    its rows' cosines against it with ONE BLAS matmul and emits its own
-    top-k — no crossJoin row explosion, no shuffle, no window (measured
-    10.0 s → 0.6 s at 2000×64 vs the expression-based crossJoin+window
-    form, whose higher-order-function cosine never enters codegen).
-    Scores round to 6dp BEFORE the per-row selection (dst tie-breaks
-    via lexsort), so the edge set still reproduces cross-engine. See
-    the module docstring for the 100 TB candidate-generation
+    n² reference build on the one exact kernel: ``knn_join`` of the
+    nodes against themselves at ``k+1``, the self edge dropped, then the
+    top ``k`` kept — the same edges as "exclude self, then rank", since
+    a duplicate vector with a lower id can push self out of the top
+    ``k+1``. See the module docstring for the 100 TB candidate-generation
     alternatives that share this output schema.
     """
-    from typing import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    rows = (df.select(F.col(id_col).alias("i"),
-                      F.col(vec_col).cast("array<double>").alias("v"))
-            .collect())
-    ids = np.array([r["i"] for r in rows])
-    mat = np.array([r["v"] for r in rows], dtype=np.float64)
-    unit = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-    sc = df.sparkSession.sparkContext
-    bc = sc.broadcast((ids, unit))
-    id_type = df.select(id_col).schema.fields[0].dataType.simpleString()
-
-    def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cids, cunit = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["__v"]), dtype=np.float64)
-            m = m / np.linalg.norm(m, axis=1, keepdims=True)
-            sims = np.round(m @ cunit.T, round_dp)
-            src_ids = pdf["__i"].to_numpy()
-            out_s, out_d, out_v = [], [], []
-            for r, sid in enumerate(src_ids):
-                srow = sims[r].copy()
-                srow[cids == sid] = -np.inf          # exclude self
-                order = np.lexsort((cids, -srow))[:k]
-                out_s.extend([sid] * len(order))
-                out_d.extend(cids[order])
-                out_v.extend(srow[order])
-            yield pd.DataFrame({"src": out_s, "dst": out_d, "sim": out_v})
-
-    from .util import spread
-    prepped = spread(
-        df.select(F.col(id_col).alias("__i"),
-                  F.col(vec_col).cast("array<double>").alias("__v")),
-        "__i")
-    return prepped.mapInPandas(
-        part, schema=f"src {id_type}, dst {id_type}, sim double")
+    q = df.select(F.col(id_col).alias("query_id"),
+                  F.col(vec_col).alias("query_vec"))
+    edges = (knn_join(q, df, k=k + 1, metric="cosine", corpus_id=id_col,
+                      corpus_vec=vec_col, round_dp=round_dp)
+             .where(F.col("query_id") != F.col("vec_id")))
+    return _top_k(edges, k, descending=True).select(
+        F.col("query_id").alias("src"), F.col("vec_id").alias("dst"),
+        F.col("distance").alias("sim"))
 
 
 def _lit_vec(vals: list[float]) -> F.Column:
@@ -236,11 +202,11 @@ def nn_descent_graph(df: DataFrame, id_col: str, vec_col: str,
     top-k — no window needed), dst vectors ride the candidate row from
     one equi-join, src vectors arrive via the cogroup's other side
     (blocked by the same hash of ``id``), and each block scores in one
-    vectorized numpy pass. Rounding is HALF-AWAY-FROM-ZERO
-    (``sign(x)·floor(|x|·s + 0.5)/s`` — cosine may be negative),
-    matching Spark ``F.round`` / the DuckDB twin exactly like the
-    ``knn.py`` cogroup kernel; ties break by dst via a stable lexsort,
-    identical to the window's ``ORDER BY sim DESC, dst``.
+    vectorized numpy pass. Rounding is half away from zero
+    (``util.round_half_up`` — cosine may be negative, and a tiny
+    negative rounds to +0.0), matching Spark ``F.round`` / the DuckDB
+    twin; ties break by dst via a stable lexsort, identical to the
+    window's ``ORDER BY sim DESC, dst``.
     """
     import numpy as np
     import pandas as pd
@@ -254,7 +220,6 @@ def nn_descent_graph(df: DataFrame, id_col: str, vec_col: str,
     nblk = df.sparkSession.sparkContext.defaultParallelism
     vblk = v.withColumn("__blk", F.pmod(F.xxhash64(F.col("id")),
                                         F.lit(nblk)))
-    scale = 10.0 ** round_dp
 
     def score_block(_key, vec_pdf, cand_pdf):
         if len(cand_pdf) == 0 or len(vec_pdf) == 0:
@@ -269,10 +234,7 @@ def nn_descent_graph(df: DataFrame, id_col: str, vec_col: str,
         B = np.array(list(cand_pdf["__bx"]), dtype=np.float64)
         sim = (A * B).sum(axis=1) / (
             np.sqrt((A * A).sum(axis=1)) * np.sqrt((B * B).sum(axis=1)))
-        # half-away-from-zero at round_dp (Spark F.round / DuckDB round;
-        # NOT np.round's half-even) — cosine is signed, so the knn.py
-        # non-negative floor(x·s+0.5) form gets a sign wrapper
-        sim = np.sign(sim) * np.floor(np.abs(sim) * scale + 0.5) / scale
+        sim = round_half_up(sim, round_dp)
         order = np.lexsort((dst, -sim, src))
         src_o, dst_o, sim_o = src[order], dst[order], sim[order]
         starts = np.flatnonzero(np.r_[True, src_o[1:] != src_o[:-1]])

@@ -5,25 +5,22 @@ Reference parity: exact brute-force squared-L2 top-k per query, k=5
 ``src/llm/llm_processor.py:48-52``); the positional id→metadata join J1
 (``faiss_db.py:56-58``) becomes a plain equi-join on ``vec_id``.
 
-Two physical strategies, same semantics:
+One exact kernel, ``knn_join``: queries are collected once to a numpy
+matrix (must fit the Spark driver — fine for ≤~1e5 queries × small
+dim; the reference uses ≤5 queries per batch, ``main.py:57``) and
+broadcast; ``mapInPandas`` over corpus partitions computes a BLAS block
+matmul ‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ (or the cosine) and emits only each
+partition's LOCAL top-k per query (the "partial aggregation" trick: the
+final window sees at most #partitions·k candidates per query, not the
+whole corpus). At 1000 executors × 100 TB corpus this is embarrassingly
+parallel with a negligible final shuffle. Beyond that: the IVF / PQ /
+LSH approximate paths below, or external ANN [ext].
 
-``knn_join``
-    Declarative: broadcast(queries) × corpus cross join, distance as a
-    Catalyst higher-order expression, per-query top-k via window. Right
-    when |Q| is small (the reference uses ≤5 queries per batch,
-    ``main.py:57``). The cross join is broadcast-nested-loop — no shuffle
-    of the corpus at all; the only shuffle is the tiny top-k window keyed
-    by query id.
-
-``knn_join_blocked``
-    Scale path: queries collected to a numpy matrix (must fit driver —
-    fine for ≤~1e5 queries × small dim), broadcast to executors;
-    ``mapInPandas`` over corpus partitions computes a BLAS block matmul
-    ‖q−c‖² = ‖q‖²+‖c‖²−2q·cᵀ and emits only each partition's LOCAL top-k
-    per query (the "partial aggregation" trick: the final window sees at
-    most #partitions·k candidates per query, not the whole corpus).
-    At 1000 executors × 100 TB corpus this is embarrassingly parallel
-    with a negligible final shuffle. Beyond that: external ANN [ext].
+Every kNN-family operator finishes with the same ``_top_k`` window
+(``distance`` then ``vec_id`` ascending — FAISS breaks ties by insertion
+order, faiss_db.py:56; an explicit id is the distributed equivalent),
+and every numpy score that must rank like Spark ``F.round`` goes
+through ``util.round_half_up``.
 """
 
 from __future__ import annotations
@@ -35,17 +32,23 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_similarity, l2_sq
-from .util import spread
+from .util import round_half_up, spread
 
 _METRICS = ("l2_sq", "cosine")
 
 
-def _score_col(metric: str, qv: str, cv: str):
-    if metric == "l2_sq":
-        return l2_sq(qv, cv), F.col("distance").asc()
-    if metric == "cosine":
-        return cosine_similarity(qv, cv), F.col("distance").desc()
-    raise ValueError(f"metric must be one of {_METRICS}")
+def _top_k(cand: DataFrame, k: int, descending: bool = False) -> DataFrame:
+    """Each query's best ``k`` rows of a ``(query_id, vec_id, distance)``
+    candidate frame, ordered by ``distance`` (ascending, or descending
+    for similarities) and then ``vec_id`` ascending — the one top-k rule
+    of the kNN family. Any other candidate columns are dropped."""
+    order = F.col("distance").desc() if descending else F.col("distance").asc()
+    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
+    return (
+        cand.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .select("query_id", "vec_id", "distance")
+    )
 
 
 def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
@@ -56,57 +59,34 @@ def knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     """Exact top-k join: for each query row, the k best corpus rows.
 
     Returns (query_id, vec_id, distance) — ``distance`` is squared L2
-    (ascending best) or cosine similarity (descending best). Ties broken
-    by corpus id for determinism (FAISS breaks ties by insertion order,
-    faiss_db.py:56; an explicit id is the distributed equivalent).
-    ``round_dp`` rounds the score BEFORE the top-k window per the
+    (ascending best) or cosine similarity (descending best); both ids
+    keep their input types. Ties break by corpus id (``_top_k``).
+    ``round_dp`` rounds the score half away from zero (Spark ``F.round``)
+    BEFORE both the per-partition and the global top-k, per the
     repo-wide round-then-rank discretization contract, so exact-duplicate
     vectors (float-noise ties) rank identically across engines.
-    """
-    q = F.broadcast(queries.select(F.col(query_id).alias("query_id"),
-                                   F.col(query_vec).alias("__qv")))
-    c = corpus.select(F.col(corpus_id).alias("vec_id"),
-                      F.col(corpus_vec).alias("__cv"))
-    score, order = _score_col(metric, "__qv", "__cv")
-    if round_dp is not None:
-        score = F.round(score, round_dp)
-    scored = q.crossJoin(c).withColumn("distance", score)
-    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "vec_id", "distance")
-    )
 
-
-def knn_join_blocked(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                     metric: str = "l2_sq",
-                     query_id: str = "query_id", query_vec: str = "query_vec",
-                     corpus_id: str = "vec_id", corpus_vec: str = "embedding") -> DataFrame:
-    """Blocked-matmul exact k-NN: numpy per partition, partial top-k.
-
-    Same result as ``knn_join`` (exact, same tie-break); physical plan
-    trades the Catalyst expression for one Arrow pass over the corpus with
-    BLAS matmuls and a per-partition top-k, then a final global top-k over
-    #partitions·k candidates per query.
+    Plan: one eager collect of the query side, then one Arrow pass over
+    the corpus — BLAS matmul per batch, local top-k per query — and the
+    global ``_top_k`` window over #partitions·k candidates per query.
     """
     import numpy as np
 
     if metric not in _METRICS:
         raise ValueError(f"metric must be one of {_METRICS}")
-
-    qrows = queries.select(F.col(query_id).alias("qid"),
-                           F.col(query_vec).cast("array<double>").alias("qv")).collect()
-    # no forced dtype: ids keep their native type (long or string)
-    qids = np.array([r["qid"] for r in qrows])
-    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)  # (nq, d)
-    sc = corpus.sparkSession.sparkContext
-    bq = sc.broadcast((qids, qmat))
     want_max = metric == "cosine"
-
     qtype = queries.schema[query_id].dataType.simpleString()
     ctype_id = corpus.schema[corpus_id].dataType.simpleString()
     out_schema = f"query_id {qtype}, vec_id {ctype_id}, distance double"
+
+    qrows = queries.select(F.col(query_id).alias("qid"),
+                           F.col(query_vec).cast("array<double>").alias("qv")).collect()
+    if not qrows:
+        return corpus.sparkSession.createDataFrame([], out_schema)
+    # no forced dtype: ids keep their native type (long or string)
+    qids = np.array([r["qid"] for r in qrows])
+    qmat = np.array([r["qv"] for r in qrows], dtype=np.float64)  # (nq, d)
+    bq = corpus.sparkSession.sparkContext.broadcast((qids, qmat))
 
     def part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         qids_, qmat_ = bq.value
@@ -118,37 +98,31 @@ def knn_join_blocked(queries: DataFrame, corpus: DataFrame, k: int = 5,
             cid = pdf[corpus_id].to_numpy()
             cmat = np.array(list(pdf[corpus_vec]), dtype=np.float64)  # (nc, d)
             dot = qmat_ @ cmat.T  # (nq, nc) — BLAS
+            cnorm2 = (cmat * cmat).sum(axis=1)
             if metric == "l2_sq":
-                cnorm2 = (cmat * cmat).sum(axis=1)
                 score = qnorm2[:, None] + cnorm2[None, :] - 2.0 * dot
             else:
-                cnormlen = np.sqrt((cmat * cmat).sum(axis=1))
-                score = dot / (qnormlen[:, None] * cnormlen[None, :])
+                score = dot / (qnormlen[:, None] * np.sqrt(cnorm2)[None, :])
+            if round_dp is not None:
+                score = round_half_up(score, round_dp)
             kk = min(k, score.shape[1])
             # local top-k per query; ties by corpus id ascending
-            key = -score if want_max else score
-            idx = np.argsort(key, axis=1, kind="stable")[:, :kk]
-            rows = {
+            idx = np.argsort(-score if want_max else score,
+                             axis=1, kind="stable")[:, :kk]
+            yield pd.DataFrame({
                 "query_id": np.repeat(qids_, kk),
                 "vec_id": cid[idx].ravel(),
                 "distance": np.take_along_axis(score, idx, axis=1).ravel(),
-            }
-            yield pd.DataFrame(rows)
+            })
 
-    # corpus rows sorted by id within partition → stable argsort breaks
-    # ties by vec_id, matching knn_join's ordering
+    # corpus rows sorted by id within partition → the stable argsort
+    # breaks ties by vec_id, matching the global window's ordering
     cand = (
         spread(corpus.select(corpus_id, corpus_vec), corpus_id)
         .sortWithinPartitions(corpus_id)
         .mapInPandas(part, schema=out_schema)
     )
-    order = F.col("distance").desc() if want_max else F.col("distance").asc()
-    w = Window.partitionBy("query_id").orderBy(order, F.col("vec_id").asc())
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "vec_id", "distance")
-    )
+    return _top_k(cand, k, descending=want_max)
 
 
 def _centroid_arrays(centroids: DataFrame, centroid_id: str,
@@ -291,13 +265,7 @@ def ivf_knn_join(queries: DataFrame, corpus: DataFrame,
         F.broadcast(probed).join(corpus_cells, "__cell")
         .withColumn("distance", l2_sq("__qv", "__cv"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(),
-                                               F.col("vec_id").asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "vec_id", "distance")
-    )
+    return _top_k(scored, k)
 
 
 def md5_planes(n_tables: int, n_planes: int, d: int):
@@ -387,7 +355,7 @@ def lsh_cosine_knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
     def bucketize(id_name: str, vec_name: str, out_vec: str,
                   id_type: str, probes: int = 0):
         # id keeps its input type (long, string, …) — same contract as
-        # knn_join_blocked / pq_encode after the r4 ADVICE fix
+        # knn_join / pq_encode after the r4 ADVICE fix
         out_schema = (f"{id_name} {id_type}, __table int, __bucket long, "
                       f"{out_vec} array<double>")
 
@@ -446,13 +414,7 @@ def lsh_cosine_knn_join(queries: DataFrame, corpus: DataFrame, k: int = 5,
         .dropDuplicates(["query_id", "vec_id"])
         .withColumn("distance", cosine_similarity("__qvec", "__cvec"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("distance").desc(),
-                                               F.col("vec_id").asc())
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "vec_id", "distance")
-    )
+    return _top_k(cand, k, descending=True)
 
 
 def ivf_write_index(corpus: DataFrame, centroids: DataFrame, path: str,
@@ -526,15 +488,10 @@ def ivf_probe_index(spark, path: str, queries: DataFrame,
     scored = (
         F.broadcast(probed)
         .join(index, "__cell")
-        .withColumn("distance", l2_sq("__qv", corpus_vec))
+        .select("query_id", F.col(corpus_id).alias("vec_id"),
+                l2_sq("__qv", corpus_vec).alias("distance"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(),
-                                               F.col(corpus_id).asc())
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", F.col(corpus_id).alias("vec_id"), "distance")
-    )
+    return _top_k(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -623,7 +580,7 @@ def pq_knn_join(queries: DataFrame, corpus: DataFrame, codebooks,
     lookup table holds exact sub-distances to every codeword.
 
     Physical plan: queries (fixed cardinality by contract, same as
-    ``knn_join_blocked``) collect to a LUT of shape (nq, m, kc) — a few
+    ``knn_join``) collect to a LUT of shape (nq, m, kc) — a few
     KB — broadcast; one Arrow pass over the ENCODED corpus does pure
     integer gathers + sums and emits each partition's local top-k per
     query; a final window keeps the global top-k of #partitions·k rows.
@@ -684,13 +641,7 @@ def pq_knn_join(queries: DataFrame, corpus: DataFrame, codebooks,
         .sortWithinPartitions(corpus_id)
         .mapInPandas(scan, schema=out_schema)
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "vec_id", "distance")
-    )
+    return _top_k(cand, k)
 
 
 def _pq_lloyd(x, m: int, kc: int, iters: int,
@@ -899,13 +850,7 @@ def _ivfpq_scan(encoded: DataFrame, luts, m: int, k: int,
 
     cand = encoded.mapInPandas(
         scan, schema=f"query_id {qtype}, vec_id {id_type}, distance double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("vec_id").asc())
-    return (
-        cand.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= k)
-        .select("query_id", "vec_id", "distance")
-    )
+    return _top_k(cand, k)
 
 
 def ivfpq_knn_join(queries: DataFrame, corpus: DataFrame,
@@ -1051,7 +996,7 @@ def mutual_knn_pairs(df: DataFrame, id_col: str, vec_col: str,
 
     Built from the exact ``knn_join`` of the corpus against itself
     (self-matches excluded before ranking by taking k+1 and dropping
-    the self edge): one broadcast-scored pass, then the directed edge
+    the self edge): one BLAS scoring pass, then the directed edge
     list joins ITSELF on the reversed pair — edge-list-sized work, no
     second scoring pass. ``round_dp`` rounds scores BEFORE the
     top-(k+1) ranking (passed through to ``knn_join``) per the repo
@@ -1070,7 +1015,7 @@ def mutual_knn_pairs(df: DataFrame, id_col: str, vec_col: str,
              .where(F.col("query_id") != F.col("vec_id")))
     # the edge list feeds both sides of the mutuality semi-join; cut
     # lineage so the scoring pass runs once, not once per reference
-    # (it is n·k rows — tiny next to the scored cross product)
+    # (it is n·k rows)
     edges = edges.localCheckpoint(eager=False)
     back = edges.select(F.col("query_id").alias("vec_id"),
                         F.col("vec_id").alias("query_id"))
@@ -1158,13 +1103,11 @@ def mutual_knn_pairs_ivf(df: DataFrame, id_col: str, vec_col: str,
         d2 = ((Q * Q).sum(axis=1)[:, None]
               + (C * C).sum(axis=1)[None, :] - 2.0 * (Q @ C.T))
         if round_dp is not None:
-            # HALF-UP (floor(x*s+0.5)/s — exact for the non-negative d²
-            # here), matching Spark F.round / the DuckDB twin's
-            # half-away-from-zero, NOT np.round's banker's half-even:
-            # a d² landing exactly on a half-ulp at round_dp must rank
-            # identically engine-vs-twin (r13, ADVICE).
-            scale = 10.0 ** round_dp
-            d2 = np.floor(d2 * scale + 0.5) / scale
+            # half away from zero, matching Spark F.round / the DuckDB
+            # twin, NOT np.round's banker's half-even: a d² landing
+            # exactly on a half-ulp at round_dp must rank identically
+            # engine-vs-twin (r13, ADVICE)
+            d2 = round_half_up(d2, round_dp)
         kk = min(kk_keep, d2.shape[1])
         idx = np.argsort(d2, axis=1, kind="stable")[:, :kk]
         return pd.DataFrame({
@@ -1176,12 +1119,8 @@ def mutual_knn_pairs_ivf(df: DataFrame, id_col: str, vec_col: str,
     scored = (probers.groupBy("__cell")
               .cogroup(members.groupBy("__cell"))
               .applyInPandas(score_cell, schema=out_schema))
-    w = Window.partitionBy("query_id").orderBy(F.col("distance").asc(),
-                                               F.col("vec_id").asc())
-    edges = (scored.withColumn("__rn", F.row_number().over(w))
-             .filter((F.col("__rn") <= k + 1)
-                     & (F.col("query_id") != F.col("vec_id")))
-             .select("query_id", "vec_id", "distance")
+    edges = (_top_k(scored, k + 1)
+             .where(F.col("query_id") != F.col("vec_id"))
              .localCheckpoint(eager=False))
     back = edges.select(F.col("query_id").alias("vec_id"),
                         F.col("vec_id").alias("query_id"))

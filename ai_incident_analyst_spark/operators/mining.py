@@ -30,13 +30,13 @@ Semantics (the sentence-transformers contract, restated relationally):
 Physical plan, and why it holds at 100 TB: the query set is
 fixed-cardinality training input → broadcast; the corpus is scanned
 once by a broadcast-nested-loop scoring pass and never shuffled before
-the per-query top-k window (same shape as ``operators/knn.py:knn_join``
-— swap in ``knn_join_blocked``'s partial-top-k Arrow pass when |Q|·|C|
-grows past the expression path, the semantics here only need the scored
-frame). The positive exclusion is a broadcast anti-join (positives ≪
-corpus); the margin anchor is a per-query 1-row aggregate joined back
-broadcast. Only the final window shuffles, keyed by query id over
-candidate rows, not the corpus.
+the per-query top-k window (the positive and margin filters run BEFORE
+the rank, so they need the whole scored frame and the partial-top-k
+Arrow pass of ``operators/knn.py:knn_join`` does not fit). The positive
+exclusion is a broadcast anti-join (positives ≪ corpus); the margin
+anchor is a per-query 1-row aggregate joined back broadcast. Only the
+final window shuffles, keyed by query id over candidate rows, not the
+corpus.
 """
 
 from __future__ import annotations

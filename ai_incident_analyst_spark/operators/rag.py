@@ -72,12 +72,6 @@ def build_history_entry(batch: DataFrame, similar: DataFrame,
     )
 
 
-def append_history(entry: DataFrame, path: str) -> None:
-    """S6: append-only history sink. The reference rewrites a whole JSON
-    file (main.py:88-92); parquet append is the scalable equivalent."""
-    entry.write.mode("append").parquet(path)
-
-
 def history_filter(df: DataFrame, service: str | None = None,
                    namespace: str | None = None, level: str | None = None,
                    keyword: str | None = None) -> DataFrame:

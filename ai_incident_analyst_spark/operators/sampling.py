@@ -23,16 +23,8 @@ The reference has no sampling at all (its LIMIT 1000 is a head-slice,
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def hash_bucket(key: Column, salt: str = "") -> Column:
-    """Uniform [0, 1) bucket for a row key: first 8 md5 hex chars as a
-    fraction. ``salt`` decorrelates independent sampling decisions made
-    on the same key (e.g. sampling vs train/test split)."""
-    h = F.md5(F.concat(F.lit(salt), key.cast("string")))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("double") / F.lit(float(16 ** 8))
 
 
 def _hex_threshold(fraction: float) -> str:

@@ -75,18 +75,6 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
     return out.drop("__salt")
 
 
-def top_frequent_keys(df: DataFrame, key: str, n: int = 20) -> DataFrame:
-    """Diagnostic: the n heaviest keys and their share — what you run
-    first when a stage straggles, to size ``salt_buckets``."""
-    total = df.count()
-    return (
-        df.groupBy(key).count()
-        .withColumn("share", F.col("count") / F.lit(float(total)))
-        .orderBy(F.col("count").desc())
-        .limit(n)
-    )
-
-
 def key_skew_report(df: DataFrame, key: str,
                     top_n: int = 10) -> DataFrame:
     """Join/agg-key skew diagnostic — the measurement that decides

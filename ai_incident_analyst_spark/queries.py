@@ -40,7 +40,7 @@ from .operators.dedup import (
     simhash_neardup,
 )
 from .operators.embedding import embed_text
-from .operators.knn import ivf_knn_join, knn_join, knn_join_blocked
+from .operators.knn import ivf_knn_join, knn_join
 from .operators.multimodal import extract_features, make_media_table
 from .operators.rag import build_prompt_df
 from .operators.text_analysis import fingerprint, lang_id, quality_score, token_count
@@ -783,7 +783,9 @@ def _label_centroids(emb):
 
 
 @q("knn_l2", _KNN_ORACLE,
-   doc="J2 flagship: exact top-5 squared-L2 join, broadcast-NL + window")
+   doc="J2 flagship: exact top-5 squared-L2 join (operators/knn.py:"
+       "knn_join — broadcast queries, per-partition BLAS matmul + local "
+       "top-k, one global window)")
 def knn_l2(spark, sf_dir):
     q_, c_ = _qc_split(spark, sf_dir)
     return (
@@ -793,12 +795,13 @@ def knn_l2(spark, sf_dir):
 
 
 @q("knn_l2_blocked", _KNN_ORACLE,
-   doc="J2 scale path: blocked numpy matmul + per-partition partial top-k; "
-       "same exact result as knn_l2")
+   doc="J2 scale path: runs the same knn_join kernel as knn_l2 (blocked "
+       "numpy matmul + per-partition partial top-k); kept so the "
+       "registry's names stay fixed")
 def knn_l2_blocked(spark, sf_dir):
     q_, c_ = _qc_split(spark, sf_dir)
     return (
-        knn_join_blocked(q_, c_, k=5, metric="l2_sq")
+        knn_join(q_, c_, k=5, metric="l2_sq")
         .withColumn("distance", F.round("distance", 6))
     )
 
@@ -1153,15 +1156,14 @@ ORDER BY cluster, pos
          "half-to-even and DuckDB half-away disagree — measured absent "
          "on the shared seed-42 data (see clustering.py docstring)")
 def q_kmeans_centroids(spark, sf_dir):
-    import numpy as np
-    from .operators.clustering import kmeans_fit
+    from .operators.clustering import _quantize, kmeans_fit
     emb = _t(spark, sf_dir, "embeddings")
     v = emb.select(
         "vec_id",
         F.slice(F.col("embedding").cast("array<double>"), 1, 8).alias("x"))
     cents, _ = kmeans_fit(v, "vec_id", "x", k=4, max_iter=2, tol=0.0,
                           round_dp=6)
-    q6 = np.floor(cents * 1e6 + 0.5).astype("int64")
+    q6 = _quantize(cents, 1_000_000)
     rows = [(int(cl), int(pos + 1), int(q6[cl, pos]))
             for cl in range(q6.shape[0]) for pos in range(q6.shape[1])]
     return spark.createDataFrame(
@@ -4576,19 +4578,14 @@ QUALIFY row_number() OVER (
          "hash stably)")
 def q_knn_int8(spark, sf_dir):
     from .functions.vectors import int_l2_sq, quantize_int8
+    from .operators.knn import _top_k
     q_, c_ = _qc_split(spark, sf_dir)
     qq = q_.select("query_id", quantize_int8("query_vec").alias("qc"))
     cc = c_.select("vec_id", quantize_int8("embedding").alias("cc"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col("vec_id").asc())
-    return (
+    return _top_k(
         cc.join(F.broadcast(qq))
         .select("query_id", "vec_id",
-                int_l2_sq("qc", "cc").alias("distance"))
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= 5)
-        .drop("__rn")
-    )
+                int_l2_sq("qc", "cc").alias("distance")), 5)
 
 
 @q("nrql_compare_with", """
@@ -10518,21 +10515,13 @@ def _ivf_recall_sql(nprobes=(1, 2, 4), k=10) -> str:
        "both sides like knn_ivf; corpus cell assignment computed once "
        "and shared across the sweep")
 def q_ivf_nprobe_recall(spark, sf_dir):
-    from .operators.knn import (
-        _centroid_arrays,
-        assign_cells,
-        ivf_knn_join,
-        knn_join_blocked,
-    )
+    from .operators.knn import _centroid_arrays, assign_cells
     emb = _t(spark, sf_dir, "embeddings")
     cents = _label_centroids(emb)
     q_, c_ = _qc_split(spark, sf_dir)
-    # exact ground-truth side via the blocked-BLAS kernel (r14): the
-    # expression-scored broadcast-nested-loop knn_join paid interpreted
-    # higher-order l2 over |q|·|corpus| rows; knn_join_blocked is the
-    # same result by contract (exact top-k, same (distance, vec_id)
-    # tie-break) from one Arrow pass with per-partition local top-k
-    exact = knn_join_blocked(q_, c_, k=10).select("query_id", "vec_id") \
+    # exact ground-truth side: one Arrow pass with per-partition local
+    # top-k, same (distance, vec_id) tie-break as the twin
+    exact = knn_join(q_, c_, k=10).select("query_id", "vec_id") \
         .localCheckpoint(eager=False)
     n_q = q_.count()
     # assign the corpus to its cells ONCE and share it across the sweep

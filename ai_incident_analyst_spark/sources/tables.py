@@ -145,10 +145,3 @@ def normalize_log_records(df: DataFrame, ts_col: str = "timestamp",
     if ts_col in df.columns:
         out = out.withColumn(ts_col, tolerant_timestamp(ts_col))
     return out
-
-
-def register_views(spark: SparkSession, sf_dir: str,
-                   names: list[str] | None = None) -> None:
-    """Register temp views so operators can also be driven via spark.sql."""
-    for n, df in load_tables(spark, sf_dir, names).items():
-        df.createOrReplaceTempView(n)

@@ -36,3 +36,13 @@ def test_read_cpu_stat_monotone():
     t1, s1 = bench.read_cpu_stat()
     assert t1 >= t0
     assert s1 >= s0
+
+
+def test_read_cpu_stat_counts_guest_once(monkeypatch):
+    # guest (8) and guest_nice (9) are already inside user and nice: the
+    # total is the first eight fields, steal is field 7 alone
+    import io
+    line = "cpu  10 1 5 100 2 0 1 3 7 2\n"
+    monkeypatch.setattr(bench, "open", lambda *a, **k: io.StringIO(line),
+                        raising=False)
+    assert bench.read_cpu_stat() == (122, 3)

@@ -95,7 +95,7 @@ def test_empty_cluster_keeps_previous_centroid(spark):
 
 def test_kmeans_centroids_drive_ivf(spark):
     from ai_incident_analyst_spark.operators.knn import (
-        ivf_knn_join, knn_join_blocked)
+        ivf_knn_join, knn_join)
     from ai_incident_analyst_spark.sources.tables import load_table
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings") \
         .select("vec_id", "embedding")
@@ -105,7 +105,7 @@ def test_kmeans_centroids_drive_ivf(spark):
         .select(F_alias(emb, "vec_id", "query_id"),
                 F_alias(emb, "embedding", "query_vec"))
     approx = ivf_knn_join(qs, emb, cdf, k=5, nprobe=2)
-    exact = knn_join_blocked(qs, emb, k=5)
+    exact = knn_join(qs, emb, k=5)
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     assert len(a & e) / len(e) >= 0.6  # nprobe=2/4 cells, recall floor

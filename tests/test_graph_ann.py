@@ -162,3 +162,32 @@ def test_nn_descent_monotone_improvement(spark, vecs):
 
     r1, r2 = recall(1), recall(2)
     assert r2 >= r1
+
+
+# nodes 0 and 1 have a cosine just below zero, inside (-0.5e-6, 0)
+_TINY_NEG = [(0, [1.0, 0.0, 0.0]), (1, [-3e-7, 1.0, 0.0]),
+             (2, [0.0, 0.0, 1.0])]
+
+
+def test_round_half_up_tiny_negative_is_positive_zero():
+    from ai_incident_analyst_spark.operators.util import round_half_up
+    cos = _cos(np.array(_TINY_NEG[0][1]), np.array(_TINY_NEG[1][1]))
+    assert -0.5e-6 < cos < 0
+    r = round_half_up(np.array([cos, -cos]), 6)
+    assert r.tolist() == [0.0, 0.0]
+    assert not np.signbit(r).any()  # +0.0, never -0.0
+    # half away from zero and sign-symmetric (np.round gives ±0.2)
+    assert round_half_up(np.array([0.25, -0.25]), 1).tolist() == [0.3, -0.3]
+
+
+def test_graph_sims_have_no_negative_zero(spark):
+    from ai_incident_analyst_spark.operators.graph_ann import (
+        nn_descent_graph)
+    df = spark.createDataFrame(_TINY_NEG,
+                               "vec_id long, embedding array<double>")
+    for build in (nn_descent_graph, build_knn_graph):
+        rows = build(df, "vec_id", "embedding", k=2).collect()
+        sims = {(r["src"], r["dst"]): r["sim"] for r in rows}
+        assert sims[(0, 1)] == 0.0 and sims[(1, 0)] == 0.0, build
+        assert not any(math.copysign(1.0, s) < 0 for s in sims.values()), \
+            (build, sims)

@@ -1,31 +1,30 @@
 """k-NN join tests: numpy exact reference (SURVEY.md §5 self-oracle),
-blocked path equivalence, IVF recall."""
+empty query side, IVF recall."""
 
 import numpy as np
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from ai_incident_analyst_spark.operators.knn import (
-    ivf_knn_join,
-    knn_join,
-    knn_join_blocked,
-)
+from ai_incident_analyst_spark.operators.knn import ivf_knn_join, knn_join
 from ai_incident_analyst_spark.sources.tables import load_table
 
 K = 5
 
 
-def _numpy_knn(qids, qmat, cids, cmat, k, metric):
+def _numpy_knn(qids, qmat, cids, cmat, k, metric, round_dp=None):
     out = {}
     for qi, qv in zip(qids, qmat):
         if metric == "l2_sq":
             d = ((cmat - qv) ** 2).sum(axis=1)
-            order = np.lexsort((cids, d))
         else:
             d = (cmat @ qv) / (np.linalg.norm(cmat, axis=1) * np.linalg.norm(qv))
-            order = np.lexsort((cids, -d))
-        out[qi] = [(int(cids[i]), float(d[i])) for i in order[:k]]
+        if round_dp is not None:
+            # half away from zero, written out independently of the engine
+            s = 10.0 ** round_dp
+            d = np.sign(d) * np.floor(np.abs(d) * s + 0.5) / s
+        order = np.lexsort((cids, d if metric == "l2_sq" else -d))
+        out[qi] = [(cids[i].item(), float(d[i])) for i in order[:k]]
     return out
 
 
@@ -43,25 +42,45 @@ def vec_data(spark, sf_dir):
     return q, c, ids[qmask], mat[qmask], ids[~qmask], mat[~qmask]
 
 
-@pytest.mark.parametrize("metric", ["l2_sq", "cosine"])
-def test_knn_matches_numpy(spark, vec_data, metric):
+@pytest.mark.parametrize("metric,round_dp,str_ids", [
+    pytest.param("l2_sq", None, False, id="l2_sq"),
+    pytest.param("cosine", None, False, id="cosine"),
+    pytest.param("cosine", 6, False, id="cosine-round_dp"),
+    pytest.param("l2_sq", None, True, id="l2_sq-string_ids"),
+])
+def test_knn_matches_numpy(spark, vec_data, metric, round_dp, str_ids):
     q, c, qids, qmat, cids, cmat = vec_data
+    if str_ids:
+        # string ids rank ties lexicographically and keep their type
+        q = q.withColumn("query_id", F.concat(F.lit("q"), "query_id"))
+        c = c.withColumn("vec_id", F.col("vec_id").cast("string"))
+        qids = np.array([f"q{i}" for i in qids])
+        cids = np.array([str(i) for i in cids])
+    out = knn_join(q, c, k=K, metric=metric, round_dp=round_dp)
+    assert [t for _, t in out.dtypes] == (
+        ["string", "string", "double"] if str_ids
+        else ["bigint", "bigint", "double"])
     got = {}
-    for r in knn_join(q, c, k=K, metric=metric).collect():
+    for r in out.collect():
         got.setdefault(r.query_id, []).append((r.vec_id, r.distance))
-    expect = _numpy_knn(qids, qmat, cids, cmat, K, metric)
+    expect = _numpy_knn(qids, qmat, cids, cmat, K, metric, round_dp)
     for qi in expect:
         assert [g[0] for g in got[qi]] == [e[0] for e in expect[qi]]
         for (gv, gd), (ev, ed) in zip(got[qi], expect[qi]):
             assert abs(gd - ed) < 1e-9
 
 
-def test_blocked_equals_declarative(spark, vec_data):
+@pytest.mark.parametrize("id_type", ["bigint", "string"])
+def test_knn_empty_query_side(spark, vec_data, id_type):
+    """Zero query rows give an empty (query_id, vec_id, distance) frame
+    with the input id types, not a worker crash."""
     q, c, *_ = vec_data
-    a = sorted(map(tuple, knn_join(q, c, k=K).collect()))
-    b = sorted(map(tuple, knn_join_blocked(q, c, k=K).collect()))
-    assert [(x[0], x[1]) for x in a] == [(x[0], x[1]) for x in b]
-    assert all(abs(x[2] - y[2]) < 1e-9 for x, y in zip(a, b))
+    q = q.select(F.col("query_id").cast(id_type), "query_vec").limit(0)
+    c = c.withColumn("vec_id", F.col("vec_id").cast(id_type))
+    out = knn_join(q, c, k=K, metric="cosine", round_dp=6)
+    assert out.collect() == []
+    assert out.dtypes == [("query_id", id_type), ("vec_id", id_type),
+                          ("distance", "double")]
 
 
 def test_ivf_recall(spark, sf_dir, vec_data):

@@ -61,10 +61,13 @@ def test_dedup_keep_first_single_shuffle(spark, sf_dir):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
-def test_knn_is_broadcast_nested_loop_not_shuffled_cartesian(spark, sf_dir):
+def test_knn_is_single_arrow_pass_not_cartesian(spark, sf_dir):
     plan = _plan(spark, sf_dir, "knn_l2")
-    assert "BroadcastNestedLoopJoin" in plan
-    assert "CartesianProduct" not in plan  # shuffled cartesian = corpus shuffle
+    # one BLAS pass over the corpus against the broadcast query matrix;
+    # the corpus is never joined against the queries row by row
+    assert plan.count("MapInPandas") == 1
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
 
 
 def test_fuzzy_dedup_plans_never_cartesian(spark, sf_dir):
@@ -109,7 +112,7 @@ def test_temperature_sample_is_narrow_filter(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-def test_graph_build_is_single_arrow_pass_no_shuffle(spark, sf_dir):
+def test_graph_build_is_single_arrow_pass(spark, sf_dir):
     from ai_incident_analyst_spark.operators.graph_ann import (
         build_knn_graph)
     from ai_incident_analyst_spark.sources.tables import load_table
@@ -117,5 +120,7 @@ def test_graph_build_is_single_arrow_pass_no_shuffle(spark, sf_dir):
     g = build_knn_graph(emb, "vec_id", "embedding", k=4)
     plan = g._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1
-    # no window, no crossJoin: the blocked form emits per-partition top-k
-    assert "Window" not in plan and "CartesianProduct" not in plan
+    # no crossJoin: the knn_join kernel scores each partition with one
+    # matmul; only the per-node top-k window follows
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan

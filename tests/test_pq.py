@@ -5,7 +5,7 @@ import numpy as np
 import pytest
 
 from ai_incident_analyst_spark.operators.knn import (
-    knn_join_blocked,
+    knn_join,
     pq_encode,
     pq_knn_join,
     pq_train_codebooks,
@@ -41,7 +41,7 @@ def test_adc_exact_when_error_zero(spark):
     got = {(r["query_id"], r["vec_id"]): r["distance"]
            for r in pq_knn_join(queries, corp, books, k=5).collect()}
     want = {(r["query_id"], r["vec_id"]): r["distance"]
-            for r in knn_join_blocked(queries, corp, k=5).collect()}
+            for r in knn_join(queries, corp, k=5).collect()}
     assert got.keys() == want.keys()
     for key in want:
         assert got[key] == pytest.approx(want[key], abs=1e-9)
@@ -65,7 +65,7 @@ def test_trained_codebook_recall(spark):
     # so @5 point-recall is not the right bar — re-ranking the top-R with
     # exact distances is the textbook final stage)
     approx = pq_knn_join(queries, corp, books, k=50).collect()
-    exact = knn_join_blocked(queries, corp, k=5).collect()
+    exact = knn_join(queries, corp, k=5).collect()
     a = {(r["query_id"], r["vec_id"]) for r in approx}
     e = {(r["query_id"], r["vec_id"]) for r in exact}
     recall = len(a & e) / len(e)
@@ -174,7 +174,7 @@ def _label_centroids(spark, corpus):
 def test_ivfpq_recall_vs_exact(spark):
     from ai_incident_analyst_spark.operators.knn import (
         ivfpq_knn_join,
-        knn_join_blocked,
+        knn_join,
     )
     rng = np.random.default_rng(31)
     centers = rng.normal(size=(6, D)) * 6.0
@@ -190,7 +190,7 @@ def test_ivfpq_recall_vs_exact(spark):
     cents = _label_centroids(spark, corp)
     approx = ivfpq_knn_join(queries, corp, cents, k=30, nprobe=2,
                             m=M, kc=16, train_sample=232)
-    exact = knn_join_blocked(queries, corp, k=5)
+    exact = knn_join(queries, corp, k=5)
     a = {(r["query_id"], r["vec_id"]) for r in approx.collect()}
     e = {(r["query_id"], r["vec_id"]) for r in exact.collect()}
     recall = len(a & e) / len(e)

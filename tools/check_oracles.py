@@ -45,17 +45,7 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark()
-    con = duckdb.connect()
-    for t in TABLES:
-        # partial dirs are legitimate (the zipf near-dup corpus ships
-        # documents only); queries touching an absent table fail loudly
-        # on their own row instead of blocking the whole run
-        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
-        else:
-            print(f"# note: {t}.parquet absent in {sf_dir} — view skipped",
-                  file=sys.stderr)
+    con = oracle_con(sf_dir)
 
     n_pass = n_fail = n_rowsonly = 0
     for name, q in REGISTRY.items():
@@ -76,36 +66,11 @@ def main():
             n_rowsonly += 1
             continue
         try:
-            res = con.execute(q.sql)
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
-            otypes = [str(t) for t in con.sql(q.sql).types]
+            problems = twin_problems(con, q.sql, scols, srows)
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             n_fail += 1
             continue
-        problems = []
-        # fetchall() yields exact Python ints for HUGEINT, but the driver's
-        # comparer goes through pandas where HUGEINT becomes float64 and
-        # hashes as '123.0' vs Spark's int64 '123' (the r5/r6
-        # kmeans_clusters red). Flag dtype-unportable oracle columns hard.
-        bad_t = [(c, t) for c, t in zip(ocols, otypes)
-                 if t in ("HUGEINT", "UHUGEINT", "UBIGINT")
-                 or t.startswith("DECIMAL")]
-        if bad_t:
-            problems.append(
-                f"pandas-unportable oracle dtypes {bad_t}: wrap in "
-                f"CAST(.. AS BIGINT/DOUBLE) — the driver gate hashes "
-                f"these as floats")
-        if sorted(scols) != sorted(ocols):
-            problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
-        if len(srows) != len(orows):
-            problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
-        if not problems:
-            a, b = norm_rows(scols, srows), norm_rows(ocols, orows)
-            if a != b:
-                diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
-                problems.append(f"values differ, e.g. {diff}")
         if problems:
             print(f"FAIL  {name}: " + "; ".join(problems))
             n_fail += 1
@@ -114,6 +79,54 @@ def main():
             n_pass += 1
     print(f"\n{n_pass} ok, {n_rowsonly} rows-only, {n_fail} FAIL")
     sys.exit(1 if n_fail else 0)
+
+
+def oracle_con(sf_dir):
+    """DuckDB connection with one view per testdata table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        # partial dirs are legitimate (the zipf near-dup corpus ships
+        # documents only); queries touching an absent table fail loudly
+        # on their own row instead of blocking the whole run
+        if os.path.exists(os.path.join(sf_dir, f"{t}.parquet")):
+            con.execute(
+                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+        else:
+            print(f"# note: {t}.parquet absent in {sf_dir} — view skipped",
+                  file=sys.stderr)
+    return con
+
+
+def twin_problems(con, sql, scols, srows) -> list[str]:
+    """How Spark's result ``(scols, srows)`` differs from its DuckDB twin
+    ``sql`` — empty when they match. Raises if the twin itself fails."""
+    res = con.execute(sql)
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    otypes = [str(t) for t in con.sql(sql).types]
+    problems = []
+    # fetchall() yields exact Python ints for HUGEINT, but a comparer
+    # that goes through pandas turns HUGEINT into float64 and hashes
+    # '123.0' vs Spark's int64 '123' (the r5/r6 kmeans_clusters red).
+    # Flag dtype-unportable oracle columns hard.
+    bad_t = [(c, t) for c, t in zip(ocols, otypes)
+             if t in ("HUGEINT", "UHUGEINT", "UBIGINT")
+             or t.startswith("DECIMAL")]
+    if bad_t:
+        problems.append(
+            f"pandas-unportable oracle dtypes {bad_t}: wrap in "
+            f"CAST(.. AS BIGINT/DOUBLE) — a pandas-based comparer "
+            f"hashes these as floats")
+    if sorted(scols) != sorted(ocols):
+        problems.append(f"cols spark={sorted(scols)} oracle={sorted(ocols)}")
+    if len(srows) != len(orows):
+        problems.append(f"rowcount spark={len(srows)} oracle={len(orows)}")
+    if not problems:
+        a, b = norm_rows(scols, srows), norm_rows(ocols, orows)
+        if a != b:
+            diff = [(x, y) for x, y in zip(a, b) if x != y][:3]
+            problems.append(f"values differ, e.g. {diff}")
+    return problems
 
 
 if __name__ == "__main__":
