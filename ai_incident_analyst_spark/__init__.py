@@ -8,7 +8,7 @@ Layout:
     sources/    table readers, schema normalization, sinks
     functions/  scalar column functions (redaction, text, vectors)
     operators/  relational + ML operators (dedup, knn, text analysis, rag)
-    plans/      LogQuery builder mirroring the reference's NRQL surface
+    plans/      NRQL string frontend planned onto DataFrame filters
     streaming/  Structured Streaming variants of the batch pipeline
 """
 

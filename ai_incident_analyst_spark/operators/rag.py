@@ -23,7 +23,7 @@ from typing import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.text import day_trunc_str, format_log_line
+from ..functions.text import day_trunc_str, format_log_line, keyword_search_json
 
 
 def pick_batch(df: DataFrame, batch_size: int, order_col: str) -> DataFrame:
@@ -85,8 +85,7 @@ def history_filter(df: DataFrame, service: str | None = None,
     if level:
         out = out.filter(F.lower(F.col("level")) == level.lower())
     if keyword:
-        blob = F.lower(F.to_json(F.struct(*[F.col(c) for c in df.columns])))
-        out = out.filter(blob.contains(keyword.lower()))
+        out = keyword_search_json(out, keyword)
     return out.orderBy(F.col("timestamp").desc())
 
 

@@ -1,12 +1,12 @@
 """NRQL-dialect string frontend: parse the reference's query strings
-directly into LogQuery plans.
+directly into DataFrame plans.
 
 The reference's entire user-facing query surface is an NRQL string
 (``src/ingestion/new_relic_fetcher.py:70-80`` composes one; ``main.py:19-25``
 rewrites one with regexes). A user switching to this engine can hand those
 same strings to ``parse_nrql`` and get a DataFrame plan with the clauses
 mapped declaratively — no string surgery downstream, and the time-window
-"rewrite" (main.py:21-25) becomes just calling ``since/until`` again.
+"rewrite" (main.py:21-25) becomes just another SINCE/UNTIL bound.
 
 Dialect (the subset the reference emits, exactly):
 
@@ -54,12 +54,13 @@ from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
+from functools import reduce
+from operator import and_
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.tables import union_tables
-from .logquery import _REL, LogQuery, time_point
 
 _CLAUSES = re.compile(
     r"^\s*SELECT\s+(?P<select>.+?)"
@@ -152,22 +153,6 @@ class ParsedNRQL:
     #: WHERE boolean tree: ("cond", col, OP, val) | ("and", (nodes…)) |
     #: ("or", (nodes…)); None when the query has no WHERE
     where: tuple | None = None
-
-    @property
-    def conds(self) -> list[tuple[str, str, str]]:
-        """Back-compat flat (col, OP, val) list — defined ONLY when the
-        WHERE is a pure AND chain of the four classic string ops the
-        reference emits. Any other shape (OR, parens, numeric, IN,
-        IS NULL) RAISES: a legacy consumer that reads only ``.conds``
-        must fail loudly rather than silently apply no filter and
-        process unfiltered data. New consumers use ``.where``."""
-        flat = _flat_and_leaves(self.where)
-        if self.where is not None and not flat:
-            raise ValueError(
-                "this query's WHERE contains OR/parens/numeric/IN/"
-                "IS NULL conditions that the flat .conds list cannot "
-                "represent; consume the .where tree instead")
-        return flat
 
 
 def _split_top(s: str) -> list[str]:
@@ -292,29 +277,6 @@ def parse_where(s: str) -> tuple:
     return tree
 
 
-#: the classic four ops the reference itself emits — only these flatten
-#: into the ParsedNRQL.conds triple list (back-compat surface); any other
-#: leaf type forces callers through the tree
-_CLASSIC_OPS = {"=", "!=", "LIKE", "NOT LIKE"}
-
-
-def _flat_and_leaves(tree: tuple | None) -> list[tuple[str, str, str]]:
-    """The (col, OP, val) leaves when the tree is a pure AND chain of
-    classic string conditions; [] otherwise (callers then must consult
-    the tree — a partial flat list would silently drop predicates)."""
-    def classic(c):
-        return (c[0] == "cond" and c[2] in _CLASSIC_OPS
-                and isinstance(c[3], str))
-
-    if tree is None:
-        return []
-    if tree[0] == "cond":
-        return [tree[1:]] if classic(tree) else []
-    if tree[0] == "and" and all(classic(c) for c in tree[1]):
-        return [c[1:] for c in tree[1]]
-    return []
-
-
 def _parse_plain_agg(p: str) -> tuple[str, str, str | None] | None:
     am = _AGG.match(p)
     if not am:
@@ -411,10 +373,25 @@ def parse_nrql(query: str) -> ParsedNRQL:
     )
 
 
+_REL = re.compile(r"^\s*(\d+)\s+(second|minute|hour|day|week)s?\s+ago\s*$", re.I)
+
+
+def time_point(when: str, now: Column | None = None) -> Column:
+    """An NRQL time point as a Column: relative "<n> <unit> ago" anchored
+    to ``now`` (or current_timestamp), else an absolute literal. Anchoring
+    to an injectable ``now`` keeps tests and oracles deterministic."""
+    m = _REL.match(when)
+    if m:
+        qty, unit = int(m.group(1)), m.group(2).upper()
+        anchor = now if now is not None else F.current_timestamp()
+        return anchor - F.expr(f"INTERVAL {qty} {unit}")
+    return F.to_timestamp(F.lit(when))
+
+
 def _where_pred(tree: tuple) -> F.Column:
     """Predicate Column from a ``parse_where`` tree. Top-level ANDs stay
-    separate conjuncts to Catalyst, so parquet pushdown splits them as
-    before; OR branches push down as a single disjunctive filter."""
+    separate conjuncts to Catalyst, so parquet pushdown splits them; OR
+    branches push down as a single disjunctive filter."""
     kind = tree[0]
     if kind == "cond":
         _, col, op, val = tree
@@ -447,48 +424,6 @@ def _where_pred(tree: tuple) -> F.Column:
     for p in parts[1:]:
         out = (out & p) if kind == "and" else (out | p)
     return out
-
-
-def _filtered_agg(inner: tuple, tree, ts_col: str) -> tuple[str, F.Column]:
-    """NRQL ``filter(agg, WHERE …)``: the aggregate over only the rows
-    matching the condition — a conditional aggregate, NOT a row filter, so
-    several filter() aggs with different conditions share one scan/pass.
-    Guard via when(): non-matching rows contribute NULL (skipped by every
-    aggregate), matching DuckDB's ``agg(CASE WHEN cond THEN x END)``.
-    """
-    fn, arg, pct = inner
-    cond = _where_pred(tree)
-    if fn == "count" and arg == "*":
-        # ELSE 0 so an all-null group yields 0, like SQL's SUM(CASE…ELSE 0)
-        return "filter_count", F.sum(
-            F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("long")
-    g = F.when(cond, F.col(arg))
-    if fn == "count":
-        return f"filter_count_{arg}", F.count(g)
-    if fn == "uniquecount":
-        return f"filter_uniquecount_{arg}", F.countDistinct(g)
-    if fn == "sum":
-        return f"filter_sum_{arg}", (
-            F.sum(F.when(cond, F.col(arg).cast("decimal(27,4)")))
-            .cast("double"))
-    if fn == "average":
-        return f"filter_average_{arg}", (
-            F.sum(F.when(cond, F.col(arg).cast("decimal(27,4)")))
-            .cast("double") / F.count(g))
-    if fn == "min":
-        return f"filter_min_{arg}", F.min(g)
-    if fn == "max":
-        return f"filter_max_{arg}", F.max(g)
-    if fn == "percentile":
-        name = f"filter_percentile_{arg}_{pct.replace('.', '_')}"
-        return name, F.round(
-            F.percentile(F.when(cond, F.col(arg).cast("double")),
-                         F.lit(float(pct) / 100.0)), 6)
-    if fn == "latest":
-        return f"filter_latest_{arg}", F.max(
-            F.when(cond, F.struct(F.col(ts_col).alias("t"),
-                                  F.col(arg).alias("v"))))["v"]
-    raise ValueError(f"unsupported NRQL function in filter(): {fn}")
 
 
 def _histogram_agg(arg: str, ceiling: float,
@@ -527,9 +462,20 @@ def _rate_agg(inner: tuple, n: int, unit: str,
 
 def _agg_expr(fn: str, arg: str, pct: str | None = None,
               ts_col: str = "ts",
-              window_secs: F.Column | None = None) -> tuple[str, F.Column]:
+              window_secs: F.Column | None = None,
+              cond: F.Column | None = None) -> tuple[str, F.Column]:
+    """One NRQL aggregate as ``(output name, Column)``.
+
+    ``cond`` is the condition of NRQL ``filter(agg, WHERE …)``: the
+    aggregate over only the rows matching it — a conditional aggregate,
+    NOT a row filter, so several filter() aggs with different conditions
+    share one scan/pass. Each input is wrapped in ``when(cond, x)``:
+    non-matching rows contribute NULL (skipped by every aggregate),
+    matching DuckDB's ``agg(CASE WHEN cond THEN x END)``. The output name
+    gains the prefix ``filter_``.
+    """
     if fn == "filter":
-        return _filtered_agg(arg, pct, ts_col)
+        return _agg_expr(*arg, ts_col=ts_col, cond=_where_pred(pct))
     if fn == "histogram":
         return _histogram_agg(arg, pct[0], pct[1])
     if fn == "rate":
@@ -537,45 +483,56 @@ def _agg_expr(fn: str, arg: str, pct: str | None = None,
             raise ValueError(
                 "rate() needs SINCE (or TIMESERIES) to define the window")
         return _rate_agg(arg, pct[0], pct[1], window_secs)
+
+    def guard(c: F.Column) -> F.Column:
+        return c if cond is None else F.when(cond, c)
+
+    if fn == "count" and arg == "*":
+        if cond is None:
+            return "count", F.count("*")
+        # ELSE 0 so an all-null group yields 0, like SQL's SUM(CASE…ELSE 0)
+        return "filter_count", F.sum(
+            F.when(cond, F.lit(1)).otherwise(F.lit(0))).cast("long")
+    v = F.col(arg)
     if fn == "count":
-        name = "count" if arg == "*" else f"count_{arg}"
-        return name, (F.count("*") if arg == "*" else F.count(arg))
-    if fn == "uniquecount":
-        return f"uniquecount_{arg}", F.countDistinct(arg)
-    if fn == "sum":
+        name, col = f"count_{arg}", F.count(guard(v))
+    elif fn == "uniquecount":
+        name, col = f"uniquecount_{arg}", F.countDistinct(guard(v))
+    elif fn == "sum":
         # DECIMAL(27,4) accumulate: order-insensitive exact sum (a double
         # sum's value depends on partition merge order), double on output
-        return f"sum_{arg}", (F.sum(F.col(arg).cast("decimal(27,4)"))
-                              .cast("double"))
-    if fn == "average":
+        name, col = f"sum_{arg}", (F.sum(guard(v.cast("decimal(27,4)")))
+                                   .cast("double"))
+    elif fn == "average":
         # exact decimal sum, then ONE double division: IEEE division is
         # bit-identical across engines, while decimal division rounds at
         # an engine-chosen result scale (Spark picked 6 fractional digits
         # here vs DuckDB's 10 — observed value drift at the 7th digit)
-        return f"average_{arg}", ((F.sum(F.col(arg).cast("decimal(27,4)"))
-                                   .cast("double")) / F.count(arg))
-    if fn == "min":
-        return f"min_{arg}", F.min(arg)
-    if fn == "max":
-        return f"max_{arg}", F.max(arg)
-    if fn == "percentile":
+        name, col = f"average_{arg}", (
+            F.sum(guard(v.cast("decimal(27,4)"))).cast("double")
+            / F.count(guard(v)))
+    elif fn == "min":
+        name, col = f"min_{arg}", F.min(guard(v))
+    elif fn == "max":
+        name, col = f"max_{arg}", F.max(guard(v))
+    elif fn == "percentile":
         # NRQL's percentile is approximate server-side; we compute the
         # EXACT interpolated quantile (Spark `percentile`, one extra
         # shuffle of the grouped values) — a correctness superset with
         # identical DuckDB twin (quantile_cont). Rounded to 6dp so the
         # interpolation's last-bit FP noise can't flip a comparison.
         name = f"percentile_{arg}_{pct.replace('.', '_')}"
-        return name, F.round(
-            F.percentile(F.col(arg).cast("double"), F.lit(float(pct) / 100.0)),
-            6)
-    if fn == "latest":
+        col = F.round(F.percentile(guard(v.cast("double")),
+                                   F.lit(float(pct) / 100.0)), 6)
+    elif fn == "latest":
         # value carried by the latest event; ties on the timestamp break
         # by the largest value (deterministic across engines, unlike a
         # bare max_by whose tie survivor is partition-order dependent)
-        return f"latest_{arg}", F.max(
-            F.struct(F.col(ts_col).alias("t"),
-                     F.col(arg).alias("v")))["v"]
-    raise ValueError(f"unsupported NRQL function: {fn}")
+        name, col = f"latest_{arg}", F.max(
+            guard(F.struct(F.col(ts_col).alias("t"), v.alias("v"))))["v"]
+    else:
+        raise ValueError(f"unsupported NRQL function: {fn}")
+    return (name if cond is None else f"filter_{name}"), col
 
 
 def run_nrql(spark: SparkSession, query: str,
@@ -594,25 +551,7 @@ def run_nrql(spark: SparkSession, query: str,
     src = (tables[p.tables[0]] if len(p.tables) == 1
            else union_tables(*[tables[t] for t in p.tables]))
 
-    lq = LogQuery(src, ts_col=ts_col)
-    if p.where is not None:
-        # pure-AND trees are applied as separate conjuncts (unchanged
-        # pushdown shape); an OR tree becomes one disjunctive predicate.
-        # NB: probe with the helper, not p.conds — the property raises on
-        # non-classic trees by design (fail-loud back-compat surface)
-        flat = _flat_and_leaves(p.where)
-        if flat:
-            for col, op, val in flat:
-                if op == "=":
-                    lq = lq.where(col, val)
-                elif op == "!=":
-                    lq = lq.where_expr(F.col(col) != F.lit(val))
-                elif op == "LIKE":
-                    lq = lq.like(col, val)
-                elif op == "NOT LIKE":
-                    lq = lq.not_like(col, val)
-        else:
-            lq = lq.where_expr(_where_pred(p.where))
+    pred = _where_pred(p.where) if p.where is not None else None
     facet = list(p.facet)
     if p.compare_with:
         # COMPARE WITH <n> <unit> ago: evaluate the aggregate over the
@@ -637,7 +576,7 @@ def run_nrql(spark: SparkSession, query: str,
         cur_start = time_point(p.since, now)
         cur_end = time_point(p.until, now) if p.until else anchor
         ts = F.col(ts_col)
-        base = lq.df()
+        base = src if pred is None else src.filter(pred)
         out = (
             base.filter((ts >= cur_start) & (ts <= cur_end))
             .withColumn("period", F.lit("current"))
@@ -648,15 +587,19 @@ def run_nrql(spark: SparkSession, query: str,
         )
         facet = ["period"] + facet
     else:
-        if p.since:
-            lq = lq.since(p.since, now=now)
-        if p.until:
-            lq = lq.until(p.until, now=now)
+        # WHERE, then SINCE, then UNTIL as one left-deep AND: top-level
+        # ANDs stay separate conjuncts, so each pushes to the scan alone
+        ts = F.col(ts_col)
+        conj = [c for c in (
+            pred,
+            ts >= time_point(p.since, now) if p.since else None,
+            ts <= time_point(p.until, now) if p.until else None,
+        ) if c is not None]
+        out = src.filter(reduce(and_, conj)) if conj else src
         if p.select and p.select != ["*"]:
-            lq = lq.select(*p.select)
+            out = out.select(*p.select)
         if p.limit is not None and not p.aggs:
-            lq = lq.limit(p.limit)
-        out = lq.df()
+            out = out.limit(p.limit)
     if p.aggs:
         wsec: F.Column | None = None
         if any(fn == "rate" for fn, _, _ in p.aggs):

@@ -44,7 +44,7 @@ from .operators.knn import ivf_knn_join, knn_join
 from .operators.multimodal import extract_features, make_media_table
 from .operators.rag import build_prompt_df
 from .operators.text_analysis import fingerprint, lang_id, quality_score, token_count
-from .plans.logquery import LogQuery
+from .plans.nrql import time_point
 from .sources.tables import load_table, union_tables
 
 
@@ -133,14 +133,12 @@ SELECT event_id, props FROM events
 WHERE props LIKE '%7%' AND props NOT LIKE '%9%' AND event_type NOT LIKE 'sign%'
 """, doc="P3/P4: LIKE / NOT LIKE predicates (NRQL new_relic_fetcher.py:75-78)")
 def like_notlike(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
     return (
-        LogQuery(ev)
-        .like("props", "%7%")
-        .not_like("props", "%9%")
-        .not_like("event_type", "sign%")
+        _t(spark, sf_dir, "events")
+        .filter(F.col("props").like("%7%")
+                & ~F.col("props").like("%9%")
+                & ~F.col("event_type").like("sign%"))
         .select("event_id", "props")
-        .df()
     )
 
 
@@ -153,12 +151,11 @@ WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts <= TIMESTAMP '2024-01-20 00:0
 GROUP BY event_type
 """, doc="P5: absolute SINCE..UNTIL window (main.py:21-25)")
 def time_window(spark, sf_dir):
-    ev = _t(spark, sf_dir, "events")
+    ts = F.col("ts")
     return (
-        LogQuery(ev)
-        .since("2024-01-10 00:00:00")
-        .until("2024-01-20 00:00:00")
-        .df()
+        _t(spark, sf_dir, "events")
+        .filter((ts >= time_point("2024-01-10 00:00:00"))
+                & (ts <= time_point("2024-01-20 00:00:00")))
         .groupBy("event_type")
         .agg(F.count("*").alias("n"),
              F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("total_value"))
@@ -174,13 +171,11 @@ def since_relative(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     mx = ev.agg(F.max("ts").alias("__mx"))
     anchored = ev.join(F.broadcast(mx))
-    out = (
-        LogQuery(anchored)
-        .since("72 hours ago", now=F.col("__mx"))
-        .df()
+    return (
+        anchored.filter(F.col("ts") >= time_point("72 hours ago",
+                                                  now=F.col("__mx")))
         .groupBy("event_type").agg(F.count("*").alias("n"))
     )
-    return out
 
 
 @q("ci_filters", """
@@ -4692,7 +4687,7 @@ FROM events
 WHERE ts >= '2024-01-03 00:00:00' AND ts <= '2024-01-20 00:00:00'
 GROUP BY user_id
 """, doc="NRQL filter() conditional aggregates (plans/nrql.py:"
-         "_filtered_agg): four differently-conditioned aggregates share "
+         "_agg_expr cond): four differently-conditioned aggregates share "
          "ONE scan/shuffle pass via when() guards — at 100 TB this is one "
          "pass where naive per-filter subqueries would be four; exact "
          "decimal accumulation preserved inside the guard")

@@ -3,11 +3,13 @@ at sf0.001 and returns a stable schema."""
 
 import importlib.util
 import sys
+from pathlib import Path
 
 import pytest
 
-spec = importlib.util.spec_from_file_location("__spark_entry__",
-                                              "/root/repo/__spark_entry__.py")
+spec = importlib.util.spec_from_file_location(
+    "__spark_entry__",
+    Path(__file__).resolve().parents[1] / "__spark_entry__.py")
 entry_mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(entry_mod)
 

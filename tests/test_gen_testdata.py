@@ -7,6 +7,7 @@ quietly invalidating the sf1 column in SCALING.md."""
 import json
 import subprocess
 import sys
+from pathlib import Path
 
 import pyarrow.parquet as pq
 import pytest
@@ -19,7 +20,9 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
 def twin_dir(tmp_path_factory):
     out = tmp_path_factory.mktemp("twin") / "sf0.001"
     subprocess.run(
-        [sys.executable, "/root/repo/tools/gen_testdata.py", "0.001",
+        [sys.executable,
+         str(Path(__file__).resolve().parents[1] / "tools/gen_testdata.py"),
+         "0.001",
          str(out)], check=True, capture_output=True)
     return str(out)
 

@@ -35,10 +35,12 @@ def test_parse_reference_default_query():
     assert p.select == ["level", "container_name", "message", "event",
                         "namespace_name"]
     assert p.tables == ["Log", "Log_dev1"]
-    assert ("namespace_name", "=", "betterworks-rainforest") in p.conds
-    assert ("message", "NOT LIKE", "%/health%") in p.conds
-    assert ("container_name", "LIKE", "%conversations%") in p.conds
-    assert len(p.conds) == 5
+    assert p.where == ("and", (
+        ("cond", "namespace_name", "=", "betterworks-rainforest"),
+        ("cond", "message", "NOT LIKE", "%/health%"),
+        ("cond", "message", "NOT LIKE", "%HTTP/1.1%"),
+        ("cond", "container_name", "LIKE", "%conversations%"),
+        ("cond", "message", "LIKE", "%error%")))
     assert p.since == "24 hours ago" and p.until is None and p.limit == 1000
 
 
@@ -117,7 +119,7 @@ def test_parse_facet_timeseries():
                       ("uniquecount", "user_id", None)]
     assert p.facet == ["event_type"]
     assert p.timeseries == "1 day"
-    assert p.conds == [("event_type", "=", "error")]
+    assert p.where == ("cond", "event_type", "=", "error")
 
 
 def test_facet_requires_aggregate():
@@ -255,13 +257,21 @@ def test_filter_agg_values(spark):
         "filter(sum(value), WHERE `event_type` = 'error'), "
         "filter(average(value), WHERE `event_type` = 'click'), "
         "filter(max(value), WHERE `event_type` != 'view'), "
-        "filter(uniqueCount(event_type), WHERE `event_type` != 'view') "
+        "filter(uniqueCount(event_type), WHERE `event_type` != 'view'), "
+        "filter(count(value), WHERE `event_type` = 'click'), "
+        "filter(min(value), WHERE `event_type` != 'click'), "
+        "filter(percentile(value, 50), WHERE `event_type` = 'error'), "
+        "filter(latest(value), WHERE `event_type` != 'click') "
         "FROM t", {"t": df}).first()
     assert r.filter_count == 2
     assert r.filter_sum_value == 30.0
     assert r.filter_average_value == 5.0
     assert r.filter_max_value == 20.0
     assert r.filter_uniquecount_event_type == 2
+    assert r.filter_count_value == 2            # the two clicks
+    assert r.filter_min_value == 10.0           # of 10, 20, 100
+    assert r.filter_percentile_value_50 == 15.0  # midpoint of 10 and 20
+    assert r.filter_latest_value == 100.0       # view at second 3
     # empty match: count -> 0, sum -> null (SQL CASE semantics)
     r2 = run_nrql(spark,
                   "SELECT filter(count(*), WHERE `event_type` = 'nope'), "
@@ -326,17 +336,11 @@ def test_parse_where_errors():
 
 
 def test_parse_nrql_or_sets_tree_not_conds():
-    import pytest
+    # the .where tree is the one parsed form, for OR and AND alike
     p = parse_nrql("SELECT * FROM Log WHERE `a` = '1' OR `b` = '2'")
-    # the flat list cannot represent an OR: reading it must fail LOUDLY
-    # (a stale consumer must never silently apply no filter)
-    with pytest.raises(ValueError, match="cannot represent"):
-        p.conds
     assert p.where == ("or", (("cond", "a", "=", "1"),
                               ("cond", "b", "=", "2")))
-    # pure-AND back-compat: conds stays flat AND where tree agrees
     q = parse_nrql("SELECT * FROM Log WHERE `a` = '1' AND `b` = '2'")
-    assert q.conds == [("a", "=", "1"), ("b", "=", "2")]
     assert q.where == ("and", (("cond", "a", "=", "1"),
                                ("cond", "b", "=", "2")))
 
@@ -383,13 +387,10 @@ def test_parse_where_extended_leaves():
     assert parse_where("`t` IS NULL") == ("cond", "t", "IS NULL", None)
     assert parse_where("`t` is not null") == \
         ("cond", "t", "IS NOT NULL", None)
-    # numeric-only leaves never flatten into the classic conds list:
-    # reading .conds raises, the tree is the consumable surface
-    import pytest
+    # string and numeric leaves mix in one AND tree
     p = parse_nrql("SELECT * FROM Log WHERE `a` = 'x' AND `v` > 9")
-    with pytest.raises(ValueError, match="cannot represent"):
-        p.conds
-    assert p.where[0] == "and"
+    assert p.where == ("and", (("cond", "a", "=", "x"),
+                               ("cond", "v", ">", 9)))
 
 
 def test_run_extended_where_semantics(spark):

@@ -1,40 +1,73 @@
-"""LogQuery builder + sources tests, including pushdown verification —
+"""NRQL clause + sources tests, including pushdown verification —
 the reference ships its filters to the New Relic server (SURVEY.md §4);
 our equivalent is filters reaching the parquet scan."""
+
+import datetime as dt
+import re
 
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from ai_incident_analyst_spark.plans.logquery import LogQuery
+from ai_incident_analyst_spark.plans.nrql import run_nrql, time_point
 from ai_incident_analyst_spark.sources.tables import load_table, union_tables
 
 
-def test_logquery_clauses(spark, sf_dir):
+def test_nrql_clauses(spark, sf_dir):
     ev = load_table(spark, sf_dir, "events")
-    out = (
-        LogQuery(ev)
-        .where("event_type", "error")
-        .like("props", "%k%")
-        .since("2024-01-05 00:00:00")
-        .until("2024-01-25 00:00:00")
-        .select("event_id", "ts", "event_type")
-        .order_by(F.col("event_id").asc())
-        .limit(10)
-        .df()
-    )
+    out = run_nrql(
+        spark,
+        "SELECT `event_id`,`ts`,`event_type` FROM events "
+        "WHERE `event_type` = 'error' AND `props` LIKE '%k%' "
+        "SINCE '2024-01-05 00:00:00' UNTIL '2024-01-25 00:00:00' LIMIT 10",
+        {"events": ev})
     rows = out.collect()
     assert 0 < len(rows) <= 10
+    assert out.columns == ["event_id", "ts", "event_type"]
     assert all(r.event_type == "error" for r in rows)
-    assert [r.event_id for r in rows] == sorted(r.event_id for r in rows)
+    lo, hi = dt.datetime(2024, 1, 5), dt.datetime(2024, 1, 25)
+    assert all(lo <= r.ts <= hi for r in rows)
 
 
-def test_logquery_relative_since(spark):
+def test_time_point_relative_since(spark):
     df = spark.createDataFrame(
         [Row(ts="2024-01-01 00:00:00"), Row(ts="2024-01-03 00:00:00")]
     ).select(F.to_timestamp("ts").alias("ts"))
-    out = LogQuery(df).since(
-        "24 hours ago", now=F.to_timestamp(F.lit("2024-01-03 12:00:00"))).df()
-    assert out.count() == 1
+    since = time_point(
+        "24 hours ago", now=F.to_timestamp(F.lit("2024-01-03 12:00:00")))
+    assert df.filter(F.col("ts") >= since).count() == 1
+
+
+def _pushed_filters(df) -> str:
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    (pushed,) = re.findall(r"PushedFilters: \[(.*)\]", plan)
+    return pushed
+
+
+def test_nrql_where_and_window_push_to_scan(spark, sf_dir):
+    """Every AND conjunct of WHERE and both SINCE/UNTIL bounds reach the
+    parquet scan as separate pushed filters; an OR tree pushes as one."""
+    key = "spark.sql.maxMetadataStringLength"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "10000")  # the default truncates the list at 100
+    try:
+        ev = {"events": load_table(spark, sf_dir, "events")}
+        pushed = _pushed_filters(run_nrql(
+            spark,
+            "SELECT `event_id` FROM events "
+            "WHERE `event_type` = 'error' AND `props` LIKE '%k%' "
+            "SINCE '2024-01-05 00:00:00' UNTIL '2024-01-25 00:00:00'", ev))
+        for f in ("EqualTo(event_type,error)", "StringContains(props,k)",
+                  "GreaterThanOrEqual(ts,2024-01-05T00:00)",
+                  "LessThanOrEqual(ts,2024-01-25T00:00)"):
+            assert f in pushed, pushed
+        pushed = _pushed_filters(run_nrql(
+            spark,
+            "SELECT `event_id` FROM events "
+            "WHERE `event_type` = 'error' OR `props` LIKE '%k%'", ev))
+        assert "Or(EqualTo(event_type,error),StringContains(props,k))" \
+            in pushed, pushed
+    finally:
+        spark.conf.set(key, old)
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):

@@ -35,8 +35,9 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 from ai_incident_analyst_spark.queries import REGISTRY, clear_session_memos
 from ai_incident_analyst_spark.session import get_spark
